@@ -17,14 +17,26 @@ import org.apache.spark.sql.functions._
   *  - `dir/bands`: the corpus band rows `(_bkey, id)`, written
   *    `partitionBy(_band, _bkt)` where `_bkt` is a hash bucket of the
   *    band key — a delta probe collects its own touched
-  *    `(_band, _bkt)` pairs (≤ numBands·bandBuckets of them, a CONFIG
-  *    bound, not a data bound) and pushes them as a literal filter, so
-  *    the scan is statically partition-pruned: I/O proportional to the
-  *    partitions the delta touches, not to corpus size;
+  *    `(_band, _bkt)` pairs (≤ numBands·bandBuckets of them) and pushes
+  *    them as a literal filter, so the scan is statically
+  *    partition-pruned: I/O proportional to the partitions the delta
+  *    touches, not to corpus size;
   *  - `dir/docs`: the corpus shingle sets `(id, _sh, _nsh)`, written
   *    `partitionBy(_ibkt)` (hash bucket of the id) — exact-Jaccard
   *    verification re-attaches shingles only for the id buckets that
   *    contain candidates, again a pruned scan.
+  *
+  * Layout: `build` SIZES the bucket counts from the corpus it sketches
+  * ([[bucketsFor]]) — per table, the smallest power of two that keeps
+  * the expected bytes per leaf directory at or under the 128 MB file
+  * target compaction already uses. A small corpus gets ONE bucket per
+  * table (numBands band leaves, one docs leaf), so every save, append
+  * and compact opens, commits and renames a handful of files instead
+  * of one per near-empty leaf; a corpus past the target splits, so
+  * leaves (and the probe's pruning) track data size. The counts
+  * persist in [[DedupIndex.Meta]]; load, probes, appends and the
+  * arrival loop's seen-map all read them from there, so an index
+  * saved under any other layout keeps it.
   *
   * Equivalence contract (the property a pipeline needs to trust the
   * index): `load(dir).deltaDedup(delta)` returns EXACTLY
@@ -77,10 +89,9 @@ final class DedupIndex private (val spark: SparkSession,
     * and whose listing cost taxes every later probe and compact (guide
     * §6 "small files hurt twice"). Clustered, each directory gets the
     * files of the tasks that own its key — one per directory here, with
-    * write parallelism = the CONFIG partition count (bands:
-    * numBands·bandBuckets = 128 ≥ any local core count; a hot-cell
-    * straggler at cluster scale is bounded by compact's size-aware
-    * rewrite). */
+    * write parallelism = the leaf count, each leaf sized by `build` to
+    * at most the 128 MB file target (a hot-cell straggler at cluster
+    * scale is bounded by compact's size-aware rewrite). */
   def save(dir: String): Unit = {
     bands.repartition(col("_band"), col("_bkt")).write.mode("overwrite")
       .partitionBy("_band", "_bkt").parquet(s"$dir/bands")
@@ -190,9 +201,9 @@ final class DedupIndex private (val spark: SparkSession,
       deltaDocsP: DataFrame, tauNum: Int, tauDenom: Int,
       maxBucket: Int, anyIndexedPartner: Boolean): DataFrame = {
     // STATIC partition pruning: the delta's touched (_band, _bkt)
-    // pairs — driver-collect bounded by numBands·bandBuckets (config,
-    // not data) — pushed as a literal predicate so the bands scan
-    // lists only the touched partition directories
+    // pairs — driver-collect bounded by numBands·bandBuckets (the
+    // persisted layout, not the delta) — pushed as a literal predicate
+    // so the bands scan lists only the touched partition directories
     val touched = deltaBands.select(col("_band"), col("_bkt")).distinct()
       .collect().map(r => (r.getInt(0), r.getInt(1)))
     val prunedBands = bands.where(
@@ -204,15 +215,14 @@ final class DedupIndex private (val spark: SparkSession,
     // count; the cap must see the union or a hot key kept here but
     // dropped by the full run (or vice versa) would desync the two.
     // The UNCAPPED convention (maxBucket = Int.MaxValue — what the
-    // streamed mirrors x57/x60/x66 run) computes NO key count at all:
-    // the window it used to flow through shuffled AND SORTED the whole
-    // candidate stream just to test `_bsz <= ∞`. The CAPPED path keeps
-    // the count-over-window: the round-20 A/B tried the guide-§2.3
-    // aggregate+semi-join rewrite both unpersisted (re-runs the pruned
-    // scan subtree twice; q255 5.5 → 6.3 s) and with the union
-    // persisted (q255 5.5 → 6.5 s — the cache fill + second exchange
-    // cost more than the window's sort at this scale); the window won
-    // both times (ab_r20_ingest_*, ab_q255_*). One pass, one exchange.
+    // streamed mirrors x57/x60/x66 run) computes NO key count at all.
+    // The CAPPED path attaches the count with ONE window over
+    // (_band, _bkey) — one exchange plus a sort of the candidate
+    // stream. An aggregate + semi-join rewrite of the cap was tried in
+    // round 20 and reverted: the same-window ingest A/B
+    // (ab_r20_ingest_{A,B}.json, round-19 → round-20 binary) showed
+    // no gain on the capped probes (q255 4.35 → 4.60 s, q256 5.71 →
+    // 5.81 s), so the window stays.
     val corpusK = prunedBands.select(col("_band"), col("_bkt"),
       col("_bkey"), col(idCol), lit(0).as("_side"))
     val deltaK = deltaBands.select(col("_band"), col("_bkt"),
@@ -272,7 +282,7 @@ object DedupIndex {
 
   /** Index table layout: `bands` is two-level (_band=N/_bkt=M), `docs`
     * one-level (_ibkt=K) — at most numBands·bandBuckets + idBuckets
-    * partition directories, a CONFIG bound. */
+    * partition directories, the layout persisted in [[Meta]]. */
   private def tables(dir: String) =
     Seq(("bands", s"$dir/bands", 2), ("docs", s"$dir/docs", 1))
 
@@ -322,16 +332,25 @@ object DedupIndex {
     * equality on (_band, _bkey) is equality on the full band key. */
   private def sketch(df: DataFrame, idCol: String, textCol: String,
                      meta: Meta): (DataFrame, DataFrame) = {
+    val docsP = graft.Caches.persist(shingled(df, idCol, textCol, meta.shingleK)
+      .withColumn("_ibkt", idBucket(col(idCol), meta.idBuckets)))
+    (bandRows(docsP, idCol, meta), docsP)
+  }
+
+  /** Shingle docs (id, _sh, _nsh) — the layout-free half of [[sketch]]. */
+  private def shingled(df: DataFrame, idCol: String, textCol: String,
+                       shingleK: Int): DataFrame = {
     graft.functions.NativeFns.register(df.sparkSession)
-    val params = HashFns.hashParams(meta.numBands * meta.rowsPerBand, meta.seed)
-    val docs0 = df.select(col(idCol), col(textCol))
+    df.select(col(idCol), col(textCol))
       .repartition(col(idCol)) // materialization barrier (see minhashLsh)
       .select(col(idCol),
-        HashFns.wordShingles(TextFns.wordTokens(col(textCol)),
-          meta.shingleK).as("_sh"))
+        HashFns.wordShingles(TextFns.wordTokens(col(textCol)), shingleK).as("_sh"))
       .withColumn("_nsh", size(col("_sh")))
-      .withColumn("_ibkt", idBucket(col(idCol), meta.idBuckets))
-    val docsP = graft.Caches.persist(docs0)
+  }
+
+  /** Band rows (id, _band, _bkey, _bkt) of persisted shingle docs. */
+  private def bandRows(docsP: DataFrame, idCol: String, meta: Meta): DataFrame = {
+    val params = HashFns.hashParams(meta.numBands * meta.rowsPerBand, meta.seed)
     val hashCol =
       if (meta.sqlMirroredHashes)
         HashFns.shingleHashesWith(col("_sh"), HashFns.md5Hash)
@@ -340,7 +359,7 @@ object DedupIndex {
       if (meta.sqlMirroredHashes)
         HashFns.lshBandKeysPlain(col("_sig"), meta.numBands, meta.rowsPerBand)
       else HashFns.lshBandKeys(col("_sig"), meta.numBands, meta.rowsPerBand)
-    val bands = docsP
+    docsP
       .select(col(idCol), hashCol.as("_hs"))
       .repartition(col(idCol))
       .withColumn("_sig", graft.functions.NativeFns.minhash(col("_hs"), params))
@@ -351,18 +370,51 @@ object DedupIndex {
       .withColumn("_bkt",
         pmod(xxhash64(col("_bkey")), lit(meta.bandBuckets.toLong)).cast("int"))
       .select(col(idCol), col("_band"), col("_bkey"), col("_bkt"))
-    (bands, docsP)
   }
 
-  /** Sketch the corpus once; call [[DedupIndex.save]] to persist. */
+  /** Bucket count for `bytes` spread over one bucket hash (all of
+    * `docs`; one band of `bands`): the smallest power of two, at least
+    * 1 (at most 2^16), that keeps the expected bytes per leaf at or
+    * under the file size compaction targets. */
+  private[graft] def bucketsFor(bytes: Long): Int = {
+    val target = graft.sources.PartitionMaintenance.DefaultTargetBytesPerFile
+    var b = 1
+    while (b < (1 << 16) && bytes > target * b) b <<= 1
+    b
+  }
+
+  /** Sketch the corpus once; call [[DedupIndex.save]] to persist.
+    *
+    * @param bandBuckets `_bkt` buckets per band; 0 (the default) sizes
+    *   them from the corpus ([[bucketsFor]] over band rows per band)
+    * @param idBuckets `_ibkt` buckets of the docs table (and of the
+    *   arrival loop's seen-map); 0 (the default) sizes them from the
+    *   corpus ([[bucketsFor]] over docs and their shingles). Sizing
+    *   costs ONE aggregate over the persisted shingle docs, which the
+    *   band sketch and the save read anyway. */
   def build(corpus: DataFrame, idCol: String, textCol: String,
             shingleK: Int = 3, numBands: Int = 8, rowsPerBand: Int = 4,
-            seed: Long = 42L, bandBuckets: Int = 16, idBuckets: Int = 16,
+            seed: Long = 42L, bandBuckets: Int = 0, idBuckets: Int = 0,
             sqlMirroredHashes: Boolean = false): DedupIndex = {
-    val meta = Meta(shingleK, numBands, rowsPerBand, seed, bandBuckets,
-      idBuckets, sqlMirroredHashes)
-    val (bands, docs) = sketch(corpus, idCol, textCol, meta)
-    new DedupIndex(corpus.sparkSession, bands, docs, idCol, meta)
+    require(bandBuckets >= 0 && idBuckets >= 0,
+      s"build: bandBuckets=$bandBuckets idBuckets=$idBuckets")
+    val docsP = graft.Caches.persist(shingled(corpus, idCol, textCol, shingleK))
+    lazy val (nDocs, nShingles) = {
+      val r = docsP.agg(count(lit(1)), coalesce(sum(col("_nsh")), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    // uncompressed upper-side byte estimates: a band row is an id plus
+    // `rowsPerBand` decimal signature values (the SQL-mirrored key, the
+    // wider form); a docs row is an id and a count plus its shingles of
+    // `shingleK` words each
+    val meta = Meta(shingleK, numBands, rowsPerBand, seed,
+      if (bandBuckets > 0) bandBuckets
+      else bucketsFor(nDocs * (16L + 12L * rowsPerBand)),
+      if (idBuckets > 0) idBuckets
+      else bucketsFor(nDocs * 16L + nShingles * 8L * shingleK),
+      sqlMirroredHashes)
+    new DedupIndex(corpus.sparkSession, bandRows(docsP, idCol, meta),
+      docsP.withColumn("_ibkt", idBucket(col(idCol), meta.idBuckets)), idCol, meta)
   }
 
   private val metaCache =

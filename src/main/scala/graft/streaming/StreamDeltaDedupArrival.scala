@@ -140,21 +140,31 @@ object StreamDeltaDedupArrival {
                    rowsPerBand: Int, seed: Long, tauNum: Int, tauDenom: Int,
                    queryName: String, numBatches: Int,
                    compactSeenAfterBatch: Option[Long] = None): DataFrame = {
+    DedupIndex.build(corpus, "doc_id", "text",
+      shingleK = shingleK, numBands = numBands, rowsPerBand = rowsPerBand,
+      seed = seed, sqlMirroredHashes = true).save(s"$stageDir/idx")
+    replaySaved(spark, delta, stageDir, tauNum, tauDenom, queryName,
+      numBatches, compactSeenAfterBatch)
+  }
+
+  /** The loop of [[replayFrames]] over the index already saved under
+    * `stageDir/idx`, in whatever layout it was saved — the seen-map and
+    * every probe and fold follow the index's persisted [[DedupIndex.Meta]]
+    * (DedupIndexSpec drives it on an explicit 16/16 layout to pin
+    * layout-neutrality). */
+  private[graft] def replaySaved(spark: SparkSession, delta: DataFrame,
+      stageDir: String, tauNum: Int, tauDenom: Int, queryName: String,
+      numBatches: Int, compactSeenAfterBatch: Option[Long] = None): DataFrame = {
     require(numBatches >= 1, s"numBatches=$numBatches")
     val idxDir = s"$stageDir/idx"
     val outDir = s"$stageDir/out_$queryName"
     val seenDir = s"$stageDir/seen_$queryName"
 
-
     // fresh sinks per run (multi-pass bench discipline, see x57)
     ReplayStage.deleteRecursively(Paths.get(outDir))
     ReplayStage.deleteRecursively(Paths.get(seenDir))
 
-    DedupIndex.build(corpus, "doc_id", "text",
-      shingleK = shingleK, numBands = numBands, rowsPerBand = rowsPerBand,
-      seed = seed, sqlMirroredHashes = true).save(idxDir)
-    val idx0 = DedupIndex.load(spark, idxDir, "doc_id")
-    val idBuckets = idx0.meta.idBuckets
+    val idBuckets = DedupIndex.load(spark, idxDir, "doc_id").meta.idBuckets
     ReplayStage.sweepAppendMarkers(idxDir)
     // empty PARTITIONED seen-map (only _SUCCESS lands — no part files,
     // no root/partition layout conflict) so batch 0 has a table to miss

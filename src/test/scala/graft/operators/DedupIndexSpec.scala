@@ -183,4 +183,116 @@ class DedupIndexSpec extends SparkSpec {
     assert(dplan.contains("PartitionFilters") && dplan.contains("_ibkt"),
       s"docs probe must be a partition-pruned scan, got:\n$dplan")
   }
+
+  /** (table, partition) leaves of a saved index. */
+  private def leaves(dir: String): Seq[(String, String)] =
+    DedupIndex.audit(spark, dir).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+
+  test("bucketsFor: tiny gives 1, past the target more than 1, always a " +
+    "power of two and monotone in size") {
+    val target = graft.sources.PartitionMaintenance.DefaultTargetBytesPerFile
+    assert(DedupIndex.bucketsFor(0L) == 1)
+    assert(DedupIndex.bucketsFor(1L) == 1)
+    assert(DedupIndex.bucketsFor(target) == 1)
+    assert(DedupIndex.bucketsFor(target + 1) == 2)
+    assert(DedupIndex.bucketsFor(2 * target + 1) == 4)
+    val sizes = (0 to 40).map(i => (1L << i) + i) ++
+      Seq(target - 1, target, target + 1, 5 * target, 100 * target)
+    val got = sizes.sorted.map(DedupIndex.bucketsFor(_))
+    assert(got.forall(b => b >= 1 && (b & (b - 1)) == 0),
+      s"every bucket count must be a power of two: $got")
+    assert(got.zip(got.tail).forall { case (a, b) => a <= b },
+      s"bucket counts must not shrink as size grows: $got")
+    sizes.zip(sizes.map(DedupIndex.bucketsFor(_))).foreach { case (n, b) =>
+      assert(n <= target * b, s"$n bytes over $b buckets exceed the target")
+      assert(b == 1 || n > target * (b / 2), s"$b buckets for $n is not the smallest")
+    }
+  }
+
+  test("derived and explicit 16/16 layouts give identical probes and " +
+    "arrival-loop keepers; the derived layout is one leaf per table") {
+    val docs = graft.sources.Tables.table(spark, sf("sf0.001"), "documents")
+      .select(col("doc_id"), col("text"))
+    val corpus = docs.where(col("doc_id") % 5 =!= 0)
+    val delta = docs.where(col("doc_id") % 5 === 0)
+    val tmp = java.nio.file.Files.createTempDirectory("dedup_layout").toString
+    def build(dir: String, buckets: Int) =
+      DedupIndex.build(corpus, "doc_id", "text", shingleK = 3, numBands = 4,
+        rowsPerBand = 2, seed = 42L, bandBuckets = buckets, idBuckets = buckets,
+        sqlMirroredHashes = true).save(dir)
+    build(s"$tmp/derived", 0)
+    build(s"$tmp/fixed", 16)
+    val derived = DedupIndex.load(spark, s"$tmp/derived", "doc_id")
+    val fixed = DedupIndex.load(spark, s"$tmp/fixed", "doc_id")
+    assert((derived.meta.bandBuckets, derived.meta.idBuckets) == ((1, 1)))
+    assert((fixed.meta.bandBuckets, fixed.meta.idBuckets) == ((16, 16)))
+    val derivedLeaves = leaves(s"$tmp/derived")
+    assert(derivedLeaves.count(_._1 == "docs") == 1 &&
+      derivedLeaves.count(_._1 == "bands") == 4, s"$derivedLeaves")
+    assert(leaves(s"$tmp/fixed").size > derivedLeaves.size)
+
+    def probe(idx: DedupIndex) = idx.deltaDedup(delta, "text",
+        tauNum = Tau._1, tauDenom = Tau._2, maxBucket = Cap)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaDerived = probe(derived)
+    graft.Caches.release()
+    assert(viaDerived == probe(fixed))
+    graft.Caches.release()
+    assert(viaDerived.exists { case (id, k) => k != id },
+      "some delta doc must have a duplicate")
+
+    // the arrival loop: replayFrames builds the derived layout itself;
+    // the explicit layout runs the same loop over the 16/16 index
+    def keepers(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val loopDerived = keepers(graft.streaming.StreamDeltaDedupArrival
+      .replayFrames(spark, corpus, delta, s"$tmp/loop_derived", shingleK = 3,
+        numBands = 4, rowsPerBand = 2, seed = 42L, tauNum = 7, tauDenom = 10,
+        queryName = "layout", numBatches = 3))
+    graft.Caches.release()
+    build(s"$tmp/loop_fixed/idx", 16)
+    val loopFixed = keepers(graft.streaming.StreamDeltaDedupArrival
+      .replaySaved(spark, delta, s"$tmp/loop_fixed", tauNum = 7,
+        tauDenom = 10, queryName = "layout", numBatches = 3))
+    graft.Caches.release()
+    assert(loopDerived.size == delta.count() && loopDerived == loopFixed,
+      "3-batch arrival keepers must not depend on the bucket layout")
+    assert(loopDerived.exists { case (id, k) => k != id })
+    val seenLeaves = graft.streaming.StreamDeltaDedupArrival
+      .auditSeen(spark, s"$tmp/loop_derived/seen_layout")
+      .collect().map(_.getString(1)).toSeq
+    assert(seenLeaves == Seq("_ibkt=0"),
+      s"the seen-map must follow the index's one id bucket: $seenLeaves")
+  }
+
+  test("an index saved with explicit 16/16 keeps its layout through " +
+    "load → appendTagged → probe, with the same keepers") {
+    val docs = graft.sources.Tables.table(spark, sf("sf0.001"), "documents")
+      .select(col("doc_id"), col("text"))
+    val corpus = docs.where(col("doc_id") % 5 > 1)
+    val d1 = docs.where(col("doc_id") % 5 === 1)
+    val d2 = docs.where(col("doc_id") % 5 === 0)
+    val tmp = java.nio.file.Files.createTempDirectory("dedup_compat").toString
+    def lifecycle(dir: String, buckets: Int) = {
+      DedupIndex.build(corpus, "doc_id", "text", numBands = 4, rowsPerBand = 2,
+        bandBuckets = buckets, idBuckets = buckets).save(dir)
+      DedupIndex.load(spark, dir, "doc_id").appendTagged(d1, "text", dir, "b0")
+      val idx = DedupIndex.load(spark, dir, "doc_id")
+      val out = idx.deltaDedup(d2, "text", tauNum = Tau._1, tauDenom = Tau._2,
+          maxBucket = Cap)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      graft.Caches.release()
+      (idx.meta, out)
+    }
+    val (fixedMeta, fixedOut) = lifecycle(s"$tmp/fixed", 16)
+    assert((fixedMeta.bandBuckets, fixedMeta.idBuckets) == ((16, 16)))
+    val fixedLeaves = leaves(s"$tmp/fixed")
+    val bkts = fixedLeaves.collect { case ("bands", p) => p.split("=").last.toInt }
+    val ibkts = fixedLeaves.collect { case ("docs", p) => p.stripPrefix("_ibkt=").toInt }
+    assert(bkts.max > 0 && bkts.forall(_ < 16) && ibkts.toSet == (0 until 16).toSet,
+      s"appendTagged must write into the saved 16/16 leaves: $fixedLeaves")
+    val (_, derivedOut) = lifecycle(s"$tmp/derived", 0)
+    assert(fixedOut == derivedOut && fixedOut.exists { case (id, k) => k != id })
+  }
 }
